@@ -85,13 +85,18 @@ object Bench {
     // cost this had been hiding.
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    headline.foreach { case (_, fn) =>
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
-    }
     // A query that throws must surface as an error, not a fast "timing":
     // round 10's fixture drift broke 12 queries and the bench recorded
-    // their fail-fast exceptions as 48-66ms improvements.
+    // their fail-fast exceptions as 48-66ms improvements. A warmup failure
+    // counts too: it is printed and the query is reported in `errors`.
     val errors = scala.collection.mutable.TreeSet[String]()
+    headline.foreach { case (name, fn) =>
+      try run(fn(spark, sfDir)) catch {
+        case e: Throwable =>
+          System.err.println(s"bench: warmup of $name failed: $e")
+          errors += name
+      }
+    }
     val cpuSec = scala.collection.mutable.Map[String, Double]()
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {

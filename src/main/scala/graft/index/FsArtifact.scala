@@ -3,7 +3,8 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Shared filesystem plumbing for persisted artifacts (vector collections,
@@ -15,6 +16,8 @@ import org.apache.spark.sql.SparkSession
  * overwriting data files and [[writeMetaJson]] AFTER — so `exists` is
  * false for the whole rebuild window and a crash mid-build can't leave an
  * artifact that looks readable but pairs old metadata with new data.
+ * Because the marker is written last, its text also names the build: a
+ * handle caches facts fixed by a build ([[PerBuild]]) against it.
  */
 private[index] trait FsArtifact {
   protected def spark: SparkSession
@@ -47,6 +50,60 @@ private[index] trait FsArtifact {
     try new String(
       org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
     finally in.close()
+  }
+
+  /** [[readMetaJson]], or None when the artifact does not exist — the
+    * existence check and the read in one filesystem round trip. */
+  protected final def metaJsonOpt(): Option[String] =
+    try Some(readMetaJson())
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The `"build"` meta field: a fresh id on every write of the marker, so
+    * two builds of one artifact (a rebuild, or a drop-and-recreate under
+    * the same name) never share meta text — the key [[PerBuild]] caches
+    * are checked against. */
+  protected final def buildStampJson: String =
+    s""","build":"${java.util.UUID.randomUUID()}""""
+
+  /** A fact fixed by one build of the artifact (a schema, centroids,
+    * codebooks), computed at most once per build per handle. The value is
+    * cached against the `_meta.json` text it was computed under, and every
+    * read passes the current text: a rebuild or drop-and-recreate through
+    * any handle rewrites the marker, which recomputes the value. A
+    * computation that throws caches nothing. */
+  protected final class PerBuild[A](compute: String => A) {
+    private var cached: Option[(String, A)] = None
+
+    def apply(metaJson: String): A = synchronized {
+      cached.collect { case (json, a) if json == metaJson => a }.getOrElse {
+        val a = compute(metaJson)
+        cached = Some(metaJson -> a)
+        a
+      }
+    }
+  }
+
+  /** One schema per artifact directory: an append must carry exactly the
+    * stored column names, each with the stored type (compared by
+    * `catalogString`, so nullability-insensitive: a local batch often
+    * carries containsNull=false where parquet reads back true). A batch
+    * that differed would write parquet files whose footers disagree with
+    * the rest, and schema-pinned reads would silently drop or null its
+    * columns. Partition columns are checked by name only: their values
+    * live in directory names, not in the footers. Returns `rows` in the
+    * stored column order. */
+  protected final def conformToSchema(rows: DataFrame, stored: StructType,
+      what: String, partitionCols: Seq[String] = Nil): DataFrame = {
+    require(rows.columns.sorted.toSeq == stored.fieldNames.sorted.toSeq,
+      s"$name: $what columns ${rows.columns.sorted.mkString(",")} != stored " +
+        s"columns ${stored.fieldNames.sorted.mkString(",")}")
+    stored.fields.filterNot(f => partitionCols.contains(f.name)).foreach { f =>
+      val got = rows.schema(f.name).dataType.catalogString
+      require(got == f.dataType.catalogString,
+        s"$name: $what column ${f.name} has type $got but the stored " +
+          s"type is ${f.dataType.catalogString}")
+    }
+    rows.select(stored.fieldNames.toSeq.map(org.apache.spark.sql.functions.col): _*)
   }
 
   /** Field extractor for the flat one-object meta JSON artifacts write

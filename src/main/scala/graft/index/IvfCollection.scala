@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{int8_scale, quantize_int8}
 import graft.search.Ivf
@@ -39,6 +40,19 @@ import graft.search.Ivf
  * assignment. The `_meta.json` completion marker is written LAST
  * ([[FsArtifact]] protocol), so `exists` is false for any crashed or
  * in-flight build.
+ *
+ * Schema contract: one `cells/` schema per build. [[upsert]] encodes with
+ * the build's codec and checks every appended batch against the stored
+ * schema (names and types; `ivf_cell` by name), so cell files never
+ * disagree, and every read of `cells/` is pinned to that schema.
+ *
+ * What a handle caches: the routing state of the current build — the
+ * layout flags, the centroids, the PQ codebooks and the `cells/` schema —
+ * all fixed by [[build]]. A query reads `_meta.json` once and reuses the
+ * state while the marker is unchanged; [[build]] writes a fresh build id
+ * into it, so a rebuild through any handle is noticed at the next call.
+ * File listings are not cached: rows an upsert appends through another
+ * handle are visible at once.
  */
 class IvfCollection(
     protected val spark: SparkSession,
@@ -60,23 +74,13 @@ class IvfCollection(
     invalidateMeta()
     val centroids = Ivf.trainCentroids(corpus, idCol, vecCol, nList, seed)
     val assigned = Ivf.assign(corpus.dropDuplicates(idCol), vecCol, centroids)
-    val stored =
-      if (int8) assigned
-        .withColumn(codeCol(vecCol), quantize_int8(col(vecCol)))
-        .withColumn(scaleCol(vecCol), int8_scale(col(vecCol)))
-        .drop(vecCol)
-      else if (pq) {
-        val cb = graft.search.Pq.trainCodebooks(corpus, idCol, vecCol, pqM,
-          pqCodebookSize, seed)
-        writeCodebooks(cb)
-        assigned
-          .withColumn(pqCol(vecCol), graft.functions.pq_encode(col(vecCol), cb))
-          .drop(vecCol)
-      } else if (binary) assigned
-        .withColumn(bitsCol(vecCol), graft.functions.binary_quantize(col(vecCol)))
-        .drop(vecCol)
-      else assigned
-    stored.write.mode(SaveMode.Overwrite)
+    val codebooks = if (!pq) None else {
+      val cb = graft.search.Pq.trainCodebooks(corpus, idCol, vecCol, pqM,
+        pqCodebookSize, seed)
+      writeCodebooks(cb)
+      Some(cb)
+    }
+    encode(assigned, vecCol, int8, codebooks, binary).write.mode(SaveMode.Overwrite)
       .partitionBy("ivf_cell")
       .parquet(dataPath)
     import spark.implicits._
@@ -84,38 +88,94 @@ class IvfCollection(
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .write.mode(SaveMode.Overwrite).parquet(centroidsPath)
-    writeMetaJson(s"""{"int8":$int8,"pq":$pq,"pqM":$pqM,"binary":$binary,"nList":$nList,"seed":$seed,"routingVersion":${IvfCollection.RoutingVersion}}""")
+    writeMetaJson(s"""{"int8":$int8,"pq":$pq,"pqM":$pqM,"binary":$binary,"nList":$nList,"seed":$seed,"routingVersion":${IvfCollection.RoutingVersion}$buildStampJson}""")
     this
   }
 
-  /** Stored cell assignments are only valid under the EXACT centroid-routing
-    * arithmetic that produced them: query() trusts the persisted ivf_cell
-    * (reuseCellCol) and upsert() appends under current routing, so a
-    * collection built under older routing would silently lose recall (its
-    * rows sit in cells the current router never probes for them). The
-    * routing version is pinned in _meta.json at build; any mismatch —
-    * including a pre-versioning artifact, recorded as version 1 — refuses
-    * loudly with a rebuild instruction instead of degrading quietly. */
-  private def checkRoutingVersion(): Unit = {
-    val v = metaFieldOpt(readMetaJson(), "routingVersion").map(_.toInt).getOrElse(1)
-    require(v == IvfCollection.RoutingVersion,
-      s"collection $name was built under centroid-routing version $v but this " +
-        s"engine routes with version ${IvfCollection.RoutingVersion}; stored " +
-        "ivf_cell assignments would not match query-time probe routing " +
-        "(silent recall loss) - rebuild the collection with build()")
+  /** The stored form of assigned rows: the float vector replaced by the
+    * build's codec columns (none for a float layout). */
+  private def encode(assigned: DataFrame, vecCol: String, int8: Boolean,
+      codebooks: Option[Array[Array[Array[Float]]]], binary: Boolean): DataFrame =
+    if (int8) assigned
+      .withColumn(codeCol(vecCol), quantize_int8(col(vecCol)))
+      .withColumn(scaleCol(vecCol), int8_scale(col(vecCol)))
+      .drop(vecCol)
+    else codebooks.map { cb =>
+      assigned
+        .withColumn(pqCol(vecCol), graft.functions.pq_encode(col(vecCol), cb))
+        .drop(vecCol)
+    }.getOrElse {
+      if (binary) assigned
+        .withColumn(bitsCol(vecCol), graft.functions.binary_quantize(col(vecCol)))
+        .drop(vecCol)
+      else assigned
+    }
+
+  /** The routing state of one build: the layout flags from `_meta.json`,
+    * and the centroids, PQ codebooks and `cells/` schema (with its
+    * `ivf_cell` partition column), each loaded on first use and kept for
+    * as long as the marker [[build]] writes last is unchanged — a rebuild
+    * through any handle writes a new one. */
+  private final class Routing(json: String) {
+    val int8: Boolean = metaField(json, "int8").toBoolean
+    val pq: Boolean = metaFieldOpt(json, "pq").exists(_.toBoolean)
+    val binary: Boolean = metaFieldOpt(json, "binary").exists(_.toBoolean)
+    private val version =
+      metaFieldOpt(json, "routingVersion").map(_.toInt).getOrElse(1)
+
+    lazy val centroids: Array[Array[Float]] =
+      spark.read.schema("cell int, centroid array<float>").parquet(centroidsPath)
+        .collect().sortBy(_.getInt(0))
+        .map(_.getSeq[Float](1).toArray)
+
+    lazy val codebooks: Option[Array[Array[Array[Float]]]] =
+      if (!pq) None
+      else Some(spark.read
+        .schema("subspace int, centroid_id int, centroid array<float>")
+        .parquet(codebooksPath).collect()
+        .sortBy(r => (r.getInt(0), r.getInt(1)))
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map(_._2.map(_.getSeq[Float](2).toArray))
+        .toArray)
+
+    lazy val cellsSchema: StructType = spark.read.parquet(dataPath).schema
+
+    def cells: DataFrame = spark.read.schema(cellsSchema).parquet(dataPath)
+
+    /** Stored cell assignments are only valid under the EXACT
+      * centroid-routing arithmetic that produced them: query() trusts the
+      * persisted ivf_cell (reuseCellCol) and upsert() appends under current
+      * routing, so a collection built under older routing would silently
+      * lose recall (its rows sit in cells the current router never probes
+      * for them). The routing version is pinned in _meta.json at build;
+      * any mismatch — including a pre-versioning artifact, recorded as
+      * version 1 — refuses loudly with a rebuild instruction instead of
+      * degrading quietly. */
+    def checkVersion(): Unit =
+      require(version == IvfCollection.RoutingVersion,
+        s"collection $name was built under centroid-routing version $version but this " +
+          s"engine routes with version ${IvfCollection.RoutingVersion}; stored " +
+          "ivf_cell assignments would not match query-time probe routing " +
+          "(silent recall loss) - rebuild the collection with build()")
   }
 
+  private val routings = new PerBuild(new Routing(_))
+
+  /** The current build's routing state: one read of `_meta.json`. */
+  private def routing(): Routing = routings(metaJsonOpt().getOrElse(
+    throw new IllegalArgumentException(s"collection $name does not exist - build() it first")))
+
   /** Whether the persisted layout stores int8 codes instead of floats. */
-  def isInt8: Boolean = metaField(readMetaJson(), "int8").toBoolean
+  def isInt8: Boolean = routing().int8
 
   /** Whether the persisted layout stores product-quantization codes
     * (m bytes per vector — 32× compression at 64-dim/m=8, vs int8's 4×). */
-  def isPq: Boolean = metaFieldOpt(readMetaJson(), "pq").exists(_.toBoolean)
+  def isPq: Boolean = routing().pq
 
   /** Whether the persisted layout stores packed sign bits (1 bit per
     * component — 32× compression with no codebooks; pair with query()'s
     * rescore to recover recall). */
-  def isBinary: Boolean = metaFieldOpt(readMetaJson(), "binary").exists(_.toBoolean)
+  def isBinary: Boolean = routing().binary
 
   private def codeCol(vecCol: String) = s"${vecCol}_code"
   private def scaleCol(vecCol: String) = s"${vecCol}_scale"
@@ -134,14 +194,12 @@ class IvfCollection(
   }
 
   /** The persisted PQ codebooks (m × k × d/m floats — a plan constant;
-    * metadata-sized driver collect, same precedent as [[centroids]]). */
+    * metadata-sized driver collect, same precedent as [[centroids]]),
+    * loaded once per build. */
   def codebooks(): Array[Array[Array[Float]]] =
-    spark.read.parquet(codebooksPath)
-      .orderBy(col("subspace"), col("centroid_id"))
-      .collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Float](2).toArray))
-      .toArray
+    routing().codebooks.getOrElse(
+      throw new IllegalArgumentException(s"collection $name has no PQ codebooks"))
+      .map(_.map(_.clone()))
 
   /** Incremental ingest: assign NEW rows (id anti-join — idempotent by
     * key, like [[VectorCollection.upsert]]) against the EXISTING
@@ -151,40 +209,27 @@ class IvfCollection(
     * distribution shifts; rebuild when probe recall decays (the standard
     * IVF operational contract). Single-writer, like every artifact here. */
   def upsert(batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    require(exists, s"collection $name does not exist - build() it first")
-    checkRoutingVersion()
+    val r = routing()
+    r.checkVersion()
     // reversed anti probe ([[graft.plans.Joins]]): one streaming pass
     // over the stored id column, never a per-batch shuffle of it
     val fresh = graft.plans.Joins.antiSmallLeft(batch.dropDuplicates(idCol),
-      load().select(col(idCol)), idCol)
-    val assigned = Ivf.assign(fresh, vecCol, centroids())
-    val stored =
-      if (isInt8) assigned
-        .withColumn(codeCol(vecCol), quantize_int8(col(vecCol)))
-        .withColumn(scaleCol(vecCol), int8_scale(col(vecCol)))
-        .drop(vecCol)
-      else if (isPq) assigned
-        // encode against the PERSISTED codebooks — like the centroids,
-        // they are frozen at build; re-training would orphan stored codes
-        .withColumn(pqCol(vecCol), graft.functions.pq_encode(col(vecCol), codebooks()))
-        .drop(vecCol)
-      else if (isBinary) assigned
-        .withColumn(bitsCol(vecCol), graft.functions.binary_quantize(col(vecCol)))
-        .drop(vecCol)
-      else assigned
-    stored.write.mode(SaveMode.Append)
+      r.cells.select(col(idCol)), idCol)
+    val assigned = Ivf.assign(fresh, vecCol, r.centroids)
+    // encode against the PERSISTED codebooks — like the centroids, they
+    // are frozen at build; re-training would orphan stored codes
+    val stored = encode(assigned, vecCol, r.int8, r.codebooks, r.binary)
+    conformToSchema(stored, r.cellsSchema, "upsert", Seq("ivf_cell"))
+      .write.mode(SaveMode.Append)
       .partitionBy("ivf_cell")
       .parquet(dataPath)
   }
 
-  def centroids(): Array[Array[Float]] =
-    spark.read.parquet(centroidsPath)
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getSeq[Float](1).toArray)
+  /** The build's centroids, in cell order (loaded once per build). */
+  def centroids(): Array[Array[Float]] = routing().centroids.map(_.clone())
 
-  /** The full assigned corpus (all cells). */
-  def load(): DataFrame = spark.read.parquet(dataPath)
+  /** The full assigned corpus (all cells), read with the build's schema. */
+  def load(): DataFrame = routing().cells
 
   /** Only the given cells — a plan whose parquet scan carries a partition
     * filter on ivf_cell (static pruning; verify with explain()). */
@@ -226,57 +271,61 @@ class IvfCollection(
       filter: Option[Column] = None,
       rescore: Option[DataFrame] = None,
       oversample: Int = 4): DataFrame = {
-    require(exists, s"collection $name does not exist - build() it first")
     require(oversample >= 1, s"oversample must be >= 1, got $oversample")
+    val r = routing()
     rescore match {
       case Some(full) =>
-        val approx = queryCodec(queries, queryId, queryVec, corpusId, corpusVec,
+        val approx = queryCodec(r, queries, queryId, queryVec, corpusId, corpusVec,
           k = k * oversample, nProbe, excludeSelf, roundScoreTo = None, filter)
         rescoreExact(approx, queries, queryId, queryVec, full, corpusId,
           corpusVec, k, roundScoreTo)
       case None =>
-        queryCodec(queries, queryId, queryVec, corpusId, corpusVec,
+        queryCodec(r, queries, queryId, queryVec, corpusId, corpusVec,
           k, nProbe, excludeSelf, roundScoreTo, filter)
     }
   }
 
   private def queryCodec(
+      r: Routing,
       queries: DataFrame, queryId: String, queryVec: String,
       corpusId: String, corpusVec: String,
       k: Int, nProbe: Int,
       excludeSelf: Boolean,
       roundScoreTo: Option[Int],
       filter: Option[Column]): DataFrame = {
-    checkRoutingVersion()
-    val cents = centroids()
+    r.checkVersion()
+    val cents = r.centroids
     // Driver-side probe-cell union: |Q| is small by the query contract, so
     // collecting the cell ids gives the scan a LITERAL partition filter
-    // (static pruning) instead of a runtime join.
+    // (static pruning) instead of a runtime join. The union is taken on the
+    // driver, not by a distinct() shuffle, and a projection over a local
+    // query frame folds into a local relation, so routing it runs no job.
     val probeCells = queries
-      .select(explode(graft.functions.nearest_centroids(col(queryVec), cents, nProbe))
-        .as("cell"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val cells = loadCells(probeCells)
+      .select(graft.functions.nearest_centroids(col(queryVec), cents, nProbe))
+      .collect()
+      .flatMap(row => if (row.isNullAt(0)) Nil else row.getSeq[Int](0))
+      .distinct.toSeq
+    val cells = r.cells.filter(col("ivf_cell").isin(probeCells: _*))
     val corpus = filter.fold(cells)(cells.filter)
     // The persisted ivf_cell column was assigned from exactly these
     // centroids at build() time — safe to reuse, skipping the per-row
     // nearest-centroid recompute.
-    if (isInt8) {
+    if (r.int8) {
       // Routing stays on the float query vector; scoring runs on codes.
       val q = queries.withColumn("__qcode", quantize_int8(col(queryVec)))
       Ivf.knnJoinIvf(q, queryId, queryVec,
         corpus, corpusId, codeCol(corpusVec),
         k, cents, nProbe, excludeSelf, roundScoreTo, reuseCellCol = true,
         metric = "int8", queryScoreCol = Some("__qcode"))
-    } else if (isPq) {
+    } else if (r.pq) {
       // Asymmetric scoring: the FLOAT query against the PQ reconstruction
       // — only the corpus side pays quantization loss; routing unchanged.
-      val cb = codebooks()
+      val cb = r.codebooks.get
       Ivf.knnJoinIvf(queries, queryId, queryVec,
         corpus, corpusId, pqCol(corpusVec),
         k, cents, nProbe, excludeSelf, roundScoreTo, reuseCellCol = true,
         scorer = Some((q, c) => graft.functions.pq_cosine(q, c, cb)))
-    } else if (isBinary) {
+    } else if (r.binary) {
       // Asymmetric again: float query vs the ±1 sign reconstruction. All
       // sign vectors share norm sqrt(dim), so the ranking is the signed
       // component sum — 1 bit of corpus bandwidth per dimension.

@@ -1,9 +1,10 @@
 package graft.index
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Parquet-backed vector collection — the engine's stand-in for the
@@ -32,15 +33,32 @@ import org.apache.spark.sql.functions._
  * separated by a BROADCAST anti-join (sidecars are mutation-sized by
  * construction) and streams through unshuffled, so merge-on-read adds a
  * per-row hash probe, not an exchange, at any corpus size. An unmutated
- * collection short-circuits to a plain scan with zero overhead.
+ * collection short-circuits to a plain scan of `data/`.
  * [[compact]] folds the sidecars into `data/` (the old full rewrite, now
  * an explicitly scheduled maintenance job) and restores the fast path.
  *
+ * Schema contract: one schema per collection. The first [[upsert]] fixes
+ * it; every later append (base rows, revival and [[setPayload]] patches)
+ * must carry exactly its column names and types or fails loudly, so
+ * `data/` never holds parquet files whose footers disagree. Sidecar
+ * schemas are derived from it (`tombstones/` = key + `__seq`, `patches/`
+ * = base + `__seq`), and every read is pinned to it with
+ * `spark.read.schema(...)` — no read starts a schema-inference job.
+ *
+ * What a handle caches: only facts the write contract fixes — the `data/`
+ * schema, inferred once per build and cached against the `_meta.json`
+ * text [[create]] writes (it carries a fresh build id), so a
+ * drop-and-recreate through another handle is noticed at the next call.
+ * Sidecar presence ([[mutated]]), the file listings and the key file are
+ * read on every call, so deletes, upserts and compactions through other
+ * handles are visible at once.
+ *
  * Idempotency: the reference skips ingest when the collection exists and
  * relies on deterministic UUID point ids for re-upload safety; here upsert
- * anti-joins new rows against the LIVE view so re-ingesting a batch is a
+ * anti-joins new rows against the stored ids so re-ingesting a batch is a
  * no-op (exactly-once by key, not by attempt), while re-upserting a
- * DELETED key lands as a patch that out-sequences its tombstone. Note:
+ * DELETED key lands as a patch that out-sequences its tombstone. A
+ * re-ingested batch is schema-checked like any other append. Note:
  * read-then-append is not atomic under CONCURRENT writers —
  * single-writer-per-collection is the supported contract (same as the
  * reference's sequential ingest loop).
@@ -71,7 +89,7 @@ class VectorCollection(
     require(!meta.metric.exists(c => c == '"' || c == '\\'),
       s"metric '${meta.metric}' may not contain '\"' or '\\'")
     writeMetaJson(
-      s"""{"dim":${meta.dim},"metric":"${meta.metric}","normalized":${meta.normalized}}""")
+      s"""{"dim":${meta.dim},"metric":"${meta.metric}","normalized":${meta.normalized}$buildStampJson}""")
     this
   }
 
@@ -89,7 +107,7 @@ class VectorCollection(
     require(!meta.metric.exists(c => c == '"' || c == '\\'),
       s"metric '${meta.metric}' may not contain '\"' or '\\'")
     writeMetaJson(
-      s"""{"dim":${meta.dim},"metric":"${meta.metric}","normalized":${meta.normalized},"partition_by":"$partitionBy"}""")
+      s"""{"dim":${meta.dim},"metric":"${meta.metric}","normalized":${meta.normalized},"partition_by":"$partitionBy"$buildStampJson}""")
     this
   }
 
@@ -97,15 +115,18 @@ class VectorCollection(
   def partitionField: Option[String] =
     metaFieldOpt(readMetaJson(), "partition_by")
 
-  /** Every `data/` write goes through here so the partitioned layout is
-    * preserved by upserts and compaction alike. */
-  private def writeData(df: DataFrame, mode: SaveMode): Unit = {
-    val w = df.write.mode(mode)
-    partitionField.fold(w) { f =>
-      require(df.columns.contains(f),
-        s"collection $name is partitioned by '$f' but the batch lacks that column")
-      w.partitionBy(f)
-    }.parquet(dataPath.toString)
+  /** Every `data/` append goes through here so the partitioned layout is
+    * preserved. The first append fixes the collection's schema; every
+    * later one must match it ([[conformToSchema]]). */
+  private def appendData(df: DataFrame): Unit = {
+    val partition = partitionField
+    partition.foreach(f => require(df.columns.contains(f),
+      s"collection $name is partitioned by '$f' but the batch lacks that column"))
+    val rows =
+      if (fs.exists(dataPath)) conformToSchema(df, dataSchema(), "upsert", partition.toSeq)
+      else df
+    val w = rows.write.mode(SaveMode.Append)
+    partition.fold(w)(w.partitionBy(_)).parquet(dataPath.toString)
   }
 
   /** Create a collection with NAMED vectors: points carry several vector
@@ -127,7 +148,7 @@ class VectorCollection(
     }
     val enc = vectors.map { case (n, d) => s"$n=$d" }.mkString(";")
     writeMetaJson(
-      s"""{"dim":${vectors.head._2},"metric":"$metric","normalized":$normalized,"vectors":"$enc"}""")
+      s"""{"dim":${vectors.head._2},"metric":"$metric","normalized":$normalized,"vectors":"$enc"$buildStampJson}""")
     this
   }
 
@@ -170,16 +191,34 @@ class VectorCollection(
   /** Whether merge-on-read sidecars are present (mutated since last compact). */
   def mutated: Boolean = fs.exists(tombPath) || fs.exists(patchPath)
 
+  /** The `data/` schema, inferred from the parquet footers once per build
+    * of the collection (cached against `_meta.json`, which [[create]]
+    * writes); every read of `data/` and of the sidecars is pinned to it,
+    * so no read runs a schema-inference job. The first upsert fixes it. */
+  private val schemas = new PerBuild[StructType](_ =>
+    spark.read.parquet(dataPath.toString).schema)
+
+  private def dataSchema(): StructType = schemas(readMetaJson())
+
+  private def read(p: Path, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(p.toString)
+
+  /** Sidecar schemas, derived from the base schema: tombstones carry the
+    * key and `__seq`, patches a full row and `__seq`. */
+  private def tombSchema(base: StructType, k: String): StructType =
+    StructType(Seq(base(k), SeqField))
+  private def patchSchema(base: StructType): StructType = base.add(SeqField)
+  private val SeqField = StructField("__seq", LongType)
+
   /** Highest sidecar sequence + 1 (base rows are sequence 0). Sidecars are
     * mutation-sized, so this scan is metadata-cheap; single-writer makes
     * the read-allocate-write race-free by contract. */
-  private def nextSeq(): Long = {
-    def maxSeq(p: Path): Long =
-      if (!fs.exists(p)) 0L
-      else Option(spark.read.parquet(p.toString).agg(max(col("__seq"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    math.max(maxSeq(tombPath), maxSeq(patchPath)) + 1L
-  }
+  private def nextSeq(): Long =
+    Seq(tombPath, patchPath).filter(fs.exists)
+      .map(read(_, StructType(Seq(SeqField))))
+      .reduceOption(_ union _)
+      .flatMap(seqs => Option(seqs.agg(max(col("__seq"))).head().get(0)))
+      .fold(0L)(_.asInstanceOf[Long]) + 1L
 
   /** Append rows whose `idCol` is not already LIVE (idempotent by key).
     * Never-seen ids append straight to `data/`; ids that exist in `data/`
@@ -190,7 +229,7 @@ class VectorCollection(
     require(!df.columns.contains("__seq") && !df.columns.contains("__del"),
       "__seq/__del are reserved merge-on-read column names")
     if (!fs.exists(dataPath)) {
-      writeData(df, SaveMode.Append)
+      appendData(df)
       return
     }
     // id-membership probes via the reversed broadcast shape
@@ -198,15 +237,10 @@ class VectorCollection(
     // broadcast threshold with the collection, and the streaming ingest
     // sink upserts once per micro-batch — each probe must stay one
     // streaming pass over it, never a per-batch shuffle+sort of it.
-    if (!mutated) {
-      writeData(graft.plans.Joins.antiSmallLeft(
-        df, load().select(col(idCol)), idCol), SaveMode.Append)
-      return
-    }
-    val rawIds = spark.read.parquet(dataPath.toString).select(col(idCol))
+    val rawIds = read(dataPath, dataSchema()).select(col(idCol))
     // brand-new keys: never present in data/ -> base rows (sequence 0)
-    writeData(graft.plans.Joins.antiSmallLeft(df, rawIds, idCol),
-      SaveMode.Append)
+    appendData(graft.plans.Joins.antiSmallLeft(df, rawIds, idCol))
+    if (!mutated) return
     // revived keys: present in data/ but not live -> patch rows that
     // out-sequence the tombstone. (The plan lists data/ lazily, but the
     // append above only ADDED ids that are live-by-construction, so the
@@ -219,23 +253,18 @@ class VectorCollection(
 
   /** The live view: base rows overlaid with patches minus tombstones,
     * last writer (highest `__seq`) per key winning. Unmutated collections
-    * return the plain scan — zero overhead on the common read path. */
+    * return the plain schema-pinned scan of `data/`. */
   def load(): DataFrame = {
-    val base = spark.read.parquet(dataPath.toString)
+    val schema = dataSchema()
+    val base = read(dataPath, schema)
     if (!mutated) return base
     val k = requireKey("load of a mutated collection")
     val baseCols = base.columns.toSeq
-    val tomb =
-      if (fs.exists(tombPath)) spark.read.parquet(tombPath.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          base.schema(k).copy(name = k),
-          org.apache.spark.sql.types.StructField("__seq",
-            org.apache.spark.sql.types.LongType))))
-    val patch =
-      if (fs.exists(patchPath)) spark.read.parquet(patchPath.toString)
-      else base.withColumn("__seq", lit(0L)).limit(0)
+    def sidecar(p: Path, s: StructType) =
+      if (fs.exists(p)) read(p, s)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+    val tomb = sidecar(tombPath, tombSchema(schema, k))
+    val patch = sidecar(patchPath, patchSchema(schema))
     // Only sidecar-touched keys pay resolution; the clean remainder is
     // split off by a BROADCAST anti-join (sidecars are mutation-sized)
     // and never shuffles.
@@ -255,25 +284,12 @@ class VectorCollection(
     clean.unionByName(survivors)
   }
 
-  /** Patch rows must land with exactly the base schema (+ `__seq`): name
-    * set and data types are validated loudly, column order normalized, so
-    * a bad assignment can never fork the parquet schema for later reads. */
-  private def appendPatches(rows: DataFrame): Unit = {
-    val base = spark.read.parquet(dataPath.toString)
-    require(rows.columns.sorted.toSeq == base.columns.sorted.toSeq,
-      s"patch schema ${rows.columns.sorted.mkString(",")} != collection schema " +
-        base.columns.sorted.mkString(","))
-    base.schema.fields.foreach { f =>
-      // catalogString comparison: nullability-insensitive (a local batch
-      // often carries containsNull=false where parquet reads back true)
-      require(rows.schema(f.name).dataType.catalogString == f.dataType.catalogString,
-        s"patch column ${f.name} has type ${rows.schema(f.name).dataType.catalogString} " +
-          s"but the collection stores ${f.dataType.catalogString}")
-    }
-    rows.select(base.columns.map(col).toSeq: _*)
+  /** Patch rows land with exactly the base schema (+ `__seq`), checked
+    * like every append ([[conformToSchema]]). */
+  private def appendPatches(rows: DataFrame): Unit =
+    conformToSchema(rows, dataSchema(), "patch")
       .withColumn("__seq", lit(nextSeq()))
       .write.mode(SaveMode.Append).parquet(patchPath.toString)
-  }
 
   /** Delete points matching `predicate` (the backend's delete-by-filter
     * API; pass `col(id).isin(...)` for delete-by-ids). Appends tombstones
@@ -299,7 +315,7 @@ class VectorCollection(
       assignments: Map[String, Column]): Unit = {
     if (!fs.exists(dataPath)) return
     requireKey("setPayload")
-    val existing = spark.read.parquet(dataPath.toString).columns.toSet
+    val existing = dataSchema().fieldNames.toSet
     val unknown = assignments.keySet -- existing
     require(unknown.isEmpty, s"setPayload targets unknown columns: $unknown")
     val matched = load().filter(coalesce(predicate, lit(false)))

@@ -475,14 +475,15 @@ object Knn {
           registered.map(_._1).mkString(", "))
       vn
     }
-    val normalized = collection.meta.normalized
+    val meta = collection.meta
+    val normalized = meta.normalized
     // The collection's stored metric is authoritative — a collection
     // created for Euclid must not be silently searched by cosine. For
     // cosine on a normalized collection, rewrite to dot (≡ on unit
     // vectors, one multiply-add per element cheaper); the query side is
     // normalized here so callers can't silently feed unnormalized vectors
     // into the dot rewrite (idempotent for already-unit queries).
-    val stored = collection.meta.metric
+    val stored = meta.metric
     val metric = stored match {
       case "cosine" if normalized => "dot"
       case "cosine" | "dot" | "euclid" | "manhattan" => stored

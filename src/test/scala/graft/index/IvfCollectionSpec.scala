@@ -92,6 +92,25 @@ class IvfCollectionSpec extends SparkSpec {
     assert(got.exceptAll(expect).count() == 0 && expect.exceptAll(got).count() == 0)
   }
 
+  test("upsert: a batch whose columns differ from the build's fails loudly, nothing lands") {
+    val root = Files.createTempDirectory("graft_ivf_schema").toString
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    val coll = IvfCollection(spark, root, "ivf_schema")
+      .build(emb.filter(col("vec_id") < 400), "vec_id", "embedding", nList = 4, seed = 42L)
+    val before = coll.load().count()
+    val rest = emb.filter(col("vec_id") >= 400)
+    val extra = intercept[IllegalArgumentException] {
+      coll.upsert(rest.withColumn("extra", lit(1)), "vec_id", "embedding")
+    }
+    assert(extra.getMessage.contains("extra"))
+    val retyped = intercept[IllegalArgumentException] {
+      coll.upsert(rest.withColumn("label", col("label").cast("string")), "vec_id", "embedding")
+    }
+    assert(retyped.getMessage.contains("label"))
+    assert(coll.load().count() == before)
+    assert(coll.load().schema("label").dataType == org.apache.spark.sql.types.IntegerType)
+  }
+
   test("int8 build: codes+scales stored, cell pruning intact, exhaustive probe ≡ exact int8 kNN") {
     import graft.functions.quantize_int8
     val root = Files.createTempDirectory("graft_ivf8").toString

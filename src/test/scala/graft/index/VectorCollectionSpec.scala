@@ -381,4 +381,34 @@ class VectorCollectionSpec extends SparkSpec {
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(id,8)") &&
       plan.contains("EqualTo(par,even)"), s"expected keyset+filter pushdown in:\n$plan")
   }
+
+  test("appends keep one schema: an extra or retyped column fails loudly, nothing lands") {
+    import org.apache.spark.sql.functions.col
+    val root = tmpRoot
+    val c = VectorCollection(spark, root, "one_schema")
+    c.create(CollectionMeta(2, "cosine", normalized = false))
+    c.upsert(Seq((1L, Array(1f, 0f), "a")).toDF("id", "vec", "tag"), "id")
+    def dataFiles = new java.io.File(s"$root/one_schema/data").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val files = dataFiles
+    val extra = intercept[IllegalArgumentException] {
+      c.upsert(Seq((2L, Array(0f, 1f), "b", 7)).toDF("id", "vec", "tag", "extra"), "id")
+    }
+    assert(extra.getMessage.contains("extra"))
+    val retyped = intercept[IllegalArgumentException] {
+      c.upsert(Seq((3L, Array(0f, 1f), 9)).toDF("id", "vec", "tag"), "id")
+    }
+    assert(retyped.getMessage.contains("tag"))
+    // a revival patch is checked the same way
+    c.delete(col("id") === 1L)
+    intercept[IllegalArgumentException] {
+      c.upsert(Seq((1L, Array(1f, 1f), 5)).toDF("id", "vec", "tag"), "id")
+    }
+    assert(dataFiles === files)
+    // the same columns in another order are the same schema
+    c.upsert(Seq(("d", 4L, Array(1f, 1f))).toDF("tag", "id", "vec"), "id")
+    assert(c.load().columns.toSeq === Seq("id", "vec", "tag"))
+    assert(c.load().select("id", "tag").as[(Long, String)].collect().toSet ===
+      Set(4L -> "d"))
+  }
 }
