@@ -25,27 +25,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The driver contract is local[32] on the 32-core bench host; honor an
-    // explicit override but never default below the machine's cores.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 500-query groups exceed the 128-key default at which
-      // ObjectHashAggregate falls back to sort-based aggregation - keep the
-      // bounded-heap top-k hashing instead of sorting scored rows.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // 80+ queries x several codegen'd stages each overflow the default
-      // 100-entry generated-class cache, so later passes re-compile what
-      // the warmup already compiled — measured as a slow creep on queries
-      // late in the iteration order (quant_recall 0.6s -> 1.0s as the
-      // bench grew). Benchmark the engine, not the cache eviction policy.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // Per-query executor CPU accounting (r21): wall-clock on a shared box
@@ -162,19 +142,24 @@ object Bench {
     val (zTotal, zRead) =
       if (errors.contains("zorder_scan")) (0, 0)
       else SparkEntry.lastZorderScanStats
-    val line = s"""{"metric":"total","value":${jNum(total)},"unit":"sec","queries":$qs,"cpu_queries":$cpuQs,"passes":$passesJson,"pass_load_avg_1m":$loadsJson,"disputed":$disputedJson,"errors":$errorsJson,"zorder_scan_files":{"total":$zTotal,"read":$zRead},"sf":"$sfDir","cores":$cpus,"load_avg_1m":${jNum(loadAvg)}}"""
+    val line = s"""{"metric":"total","value":${jNum(total)},"unit":"sec","queries":$qs,"cpu_queries":$cpuQs,"passes":$passesJson,"pass_load_avg_1m":$loadsJson,"disputed":$disputedJson,"errors":$errorsJson,"zorder_scan_files":{"total":$zTotal,"read":$zRead},"sf":"$sfDir","cores":${spark.sparkContext.defaultParallelism},"load_avg_1m":${jNum(loadAvg)}}"""
     println(line)
     // Durable copy: the driver snapshots only the tail of stdout (~2000
     // chars), which the full self-adjudicating line can overflow (BENCH_r06
     // lost its `total` + 10 queries that way). The tracked repo file is the
     // artifact of record; stdout stays the driver contract.
+    // Best-effort: a failed write is reported, never fatal to the bench.
+    // The default is relative to the working directory, the repo root
+    // under `sbt run`.
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out/latest.json"))
     try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out/latest.json"))
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // best-effort: never fail the bench over the copy
+    } catch {
+      case e: Throwable => System.err.println(s"bench: could not write $out: $e")
+    }
     spark.stop()
   }
 }

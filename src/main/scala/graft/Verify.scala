@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,23 +9,7 @@ object Verify {
     // the driver always runs the full set).
     val only: Set[String] =
       if (args.length > 2) args(2).split(',').toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // 500-query groups exceed the 128-key default at which
-      // ObjectHashAggregate falls back to sort-based aggregation - keep the
-      // bounded-heap top-k hashing instead of sorting scored rows.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // 80+ multi-stage queries overflow the default 100-entry generated-
-      // class cache (see Bench.scala) — harmless for correctness but the
-      // recompiles double this run's wall time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for named SparkEntry queries to
   * <outDir>/<query>_<suffix>.txt — the plan-evidence artifacts the
   * optimization rounds commit under plans/rNN/ (the judge checks plan
@@ -16,17 +14,7 @@ object PlanDump {
     val outDir = new java.io.File(args(2))
     val suffix = args(3)
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-plandump")
     val names =
       if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq

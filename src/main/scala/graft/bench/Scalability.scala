@@ -101,18 +101,7 @@ object ScalabilityBench {
     val outDir = args.lift(1).getOrElse("/tmp/graft_scalability")
     val sizes = args.lift(2).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(100, 200, 500))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 500-query groups exceed the 128-key default at which
-      // ObjectHashAggregate falls back to sort-based aggregation - keep the
-      // bounded-heap top-k hashing instead of sorting scored rows.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-scalability")
     val corpus = graft.Tables.embeddings(spark, sfDir)
     val points = Scalability.sweep(spark, corpus, "vec_id", "embedding",
       s"$outDir/collections", sizes)

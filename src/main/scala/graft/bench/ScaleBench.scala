@@ -85,23 +85,14 @@ object ScaleBench {
       .map(_.split(',').map(_.trim).toSet)
       .getOrElse(Set("cc", "span", "streamflat", "ivf"))
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Deep sweeps must scale partition count with data, exactly as a
-      // real cluster would: at 300× the 32-partition default gives each
-      // task a ~7M-row aggregation state and 32 concurrent tasks exhaust
-      // the single JVM's execution memory before the hash agg can even
-      // allocate (the measured factor-300 cliff, BENCH_SCALE.md r17).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Deep sweeps must scale partition count with data, exactly as a real
+    // cluster would: at 300× the 32-partition default gives each task a
+    // ~7M-row aggregation state and 32 concurrent tasks exhaust the single
+    // JVM's execution memory before the hash agg can even allocate (the
+    // factor-300 cliff in BENCH_SCALE.md, "deep sweep past 100×").
+    val spark = graft.GraftSession("graft-scalebench",
+      sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS").toSeq
+        .map("spark.sql.shuffle.partitions" -> _): _*)
     // Opt-in durable-materialization sweep (MAINTENANCE.md
     // "Eager-materialization modes"): measures the preemptible-cluster
     // mode's cost at scale — identical results by DedupSpec's identity
@@ -392,7 +383,7 @@ object ScaleBench {
           s""""build_s":${jNum(buildSecs)},"admit_s":${jNum(admitSecs)},""" +
           s""""batches":$admitBatches,"admitted":$admitted,"fully_cut":$fullyCut},"""
     }
-    val line = s"""{"metric":"scale","sf_dir":"$srcDir","cores":$cpus,""" +
+    val line = s"""{"metric":"scale","sf_dir":"$srcDir","cores":${spark.sparkContext.defaultParallelism},""" +
       s""""factors":${factors.mkString("[", ",", "]")},""" +
       s""""per_factor":$factorJson,""" +
       ccJson + spanJson +

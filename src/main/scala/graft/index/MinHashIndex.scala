@@ -279,9 +279,9 @@ class MinHashIndex(
 
   /** Stage 1 of [[nearDupAgainstExact]] — the LSH BAND JOIN: batch
     * signatures broadcast onto the corpus band table, bucket-capped,
-    * distinct (bid, id) candidate pairs out. Split from the verify so the
-    * admission probe ([[graft.bench.AdmitProbe]]) can price the two
-    * stages separately; composition unchanged.
+    * distinct (bid, id) candidate pairs out. Split from the verify so
+    * each stage can be priced and tested on its own (BENCH_SCALE.md,
+    * "admission stage split"); composition unchanged.
     *
     * @return eager (bid, id) candidate pairs */
   private[graft] def candidatePairsAgainst(

@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions.{broadcast, col}
  * either way.
  *
  * SIZE-AWARE DISPATCH (r17): below the broadcast threshold the reversed
- * shape pays its two-join overhead for nothing — JoinsProbe measured it
- * 2× slower than the plain join at 100k keys (0.33 s vs 0.16 s) while
- * being the only viable shape at 10M+ (0.36 s vs 1.67 s at 50M). These
+ * shape pays its two-join overhead for nothing — measured 2× slower than
+ * the plain join at 100k keys (0.33 s vs 0.16 s) while being the only
+ * viable shape at 10M+ (0.36 s vs 1.67 s at 50M); BENCH_SCALE.md, "joins
+ * probe — reversed id-membership probes at corpus scale". These
  * entry points therefore dispatch on the key table's OWN plan statistics
  * against the session's `autoBroadcastJoinThreshold` — the exact
  * statistic and bound Spark's planner would use to broadcast the plain

@@ -258,7 +258,8 @@ object Streaming {
     * hidden child: Spark's PARALLEL partition discovery (>32 partition
     * dirs) filters out roots whose name is hidden, so a `_`-prefixed
     * nested base silently reads as empty exactly when the bucket count
-    * makes pruning worthwhile (found by SidecarProbe at 256 buckets; the
+    * makes pruning worthwhile (found at 256 buckets, BENCH_SCALE.md
+    * "sidecar probe — bucketed base for the admission replay guard"; the
     * 4-bucket spec fixture sat under the parallel-listing threshold and
     * hid the failure). A sibling keeps L0 reads pure without relying on
     * hidden-path filtering at all. */

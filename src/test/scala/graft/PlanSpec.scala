@@ -384,4 +384,21 @@ class PlanSpec extends SparkSpec {
     assert(hosts.nonEmpty,
       s"simple_lower must fold inside a codegen stage:\n$exec")
   }
+
+  test("a stage whose generated code overflows 64 KB fails instead of running interpreted") {
+    // GraftSession sets spark.sql.codegen.fallback=false: a balanced
+    // 2048-leaf CASE WHEN tree outgrows janino's 64 KB method limit, and
+    // the aggregate over it must throw rather than quietly drop to
+    // interpreted execution.
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    def tree(lo: Int, hi: Int): Column =
+      if (hi - lo == 1) lit(lo.toLong)
+      else {
+        val mid = (lo + hi) / 2
+        when(col("id") < mid, tree(lo, mid)).otherwise(tree(mid, hi))
+      }
+    val df = spark.range(0, 2000).select(tree(0, 2048).as("b")).agg(sum("b"))
+    intercept[org.codehaus.commons.compiler.InternalCompilerException](df.collect())
+  }
 }

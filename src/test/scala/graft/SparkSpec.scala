@@ -3,24 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM per sbt test fork). */
+/** Shared local SparkSession for all suites (one JVM per sbt test fork),
+  * built by [[GraftSession]] so specs run the bench's configuration. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // per-JVM dir: a crashed run's leftover managed-table files would
-      // otherwise fail every later CTAS into the same fixed path
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("graft-test",
+    // per-JVM dir: a crashed run's leftover managed-table files would
+    // otherwise fail every later CTAS into the same fixed path
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString)
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

@@ -159,4 +159,32 @@ class TopKRowsSpec extends SparkSpec {
     assert(aggCount >= 2, s"expected partial+final ObjectHashAggregate, plan:\n$plan")
     assert(!plan.contains("Window"), s"window exchange still present:\n$plan")
   }
+
+  test("knnJoin agg path matches the window path when ObjectHashAggregate falls back to sorting") {
+    // The session's 131072-key threshold keeps every other spec on the
+    // hash path; a 2-key threshold under 20 query groups forces the
+    // sort-based fallback, which must merge the same heaps.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    val q = emb.limit(20)
+    def scored(useAgg: Boolean) =
+      Knn.knnJoin(q, "vec_id", "embedding", emb, "vec_id", "embedding",
+          k = 7, roundScoreTo = Some(6), useTopKAgg = useAgg)
+        .select("query_id", "vec_id", "score", "rank")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+    withConf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2") {
+      val agg = scored(useAgg = true)
+      val aggRows = rows(agg)
+      assert(aggRows.map(_._1).distinct.size > 2)
+      val fellBack = new AdaptiveSparkPlanHelper {}
+        .collect(agg.queryExecution.executedPlan) {
+          case a: ObjectHashAggregateExec => a.metrics("numTasksFallBacked").value
+        }.sum
+      assert(fellBack > 0, "no ObjectHashAggregate task took the sort-based path")
+      assert(aggRows == rows(scored(useAgg = false)))
+    }
+  }
 }
